@@ -5,4 +5,8 @@ idiomatic Spark architecture: WKB geometry columns, cover-cell equi-joins,
 ring-expansion kNN, applyInPandas geometry/graph kernels, lineage ledger.
 """
 
+from . import zipcache
+
 __version__ = "0.1.0"
+
+zipcache.install()

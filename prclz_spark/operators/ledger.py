@@ -64,12 +64,15 @@ class Ledger:
         )
         rows.write.mode("append").parquet(self.path)
 
-    def record_errors(self, stage: str, keys: list, error: str = "kernel") -> None:
-        if not keys:
+    def record_errors(self, stage: str, errors: dict[str, str]) -> None:
+        """Append one row per failed key carrying that key's own status
+        (``error:<Class>``). Only ``'ok'`` counts as done, so a resume
+        retries these keys."""
+        if not errors:
             return
         now = time.time()
         rows = self.spark.createDataFrame(
-            [(stage, k, "error", 0, None, 1, now) for k in keys],
+            [(stage, k, status, 0, None, 1, now) for k, status in errors.items()],
             "stage string, partition_key string, status string, n_rows long, wall_ms double, attempt int, ts double",
         )
         rows.write.mode("append").parquet(self.path)

@@ -22,6 +22,11 @@ from .operators.parcels import tessellate
 from .operators.reblock_op import reblock
 
 
+def _errors(out: DataFrame, key_col: str, status_col: str, failed) -> dict[str, str]:
+    """{failed key: its status}, e.g. {'R7': 'error:ValueError'}."""
+    return dict(out.filter(failed).groupBy(key_col).agg(F.min(status_col)).collect())
+
+
 def run_pipeline(
     spark: SparkSession,
     lines: DataFrame,
@@ -44,13 +49,10 @@ def run_pipeline(
         out = extract_blocks(lines, pending_gadm, res, keep_status=True).persist()
         ok = out.filter(F.col("status") == "ok").drop("status")
         ok.write.mode("append").partitionBy("gadm").parquet(blocks_path)
-        # a failed kernel must NOT look done: record its gadm as status=error
-        # so a resume retries it, and it never reaches downstream stages
-        err_keys = [
-            r["gadm"]
-            for r in out.filter(F.col("status") != "ok").select("gadm").distinct().collect()
-        ]
-        led.record_errors("blocks", err_keys)
+        # a failed kernel must NOT look done: record its gadm with the
+        # kernel's error:<Class> status so a resume retries it, and it never
+        # reaches downstream stages
+        led.record_errors("blocks", _errors(out, "gadm", "status", F.col("status") != "ok"))
         led.record("blocks", spark.read.parquet(blocks_path).join(
             pending_gadm.select("gadm"), "gadm", "left_semi"
         ), "gadm")
@@ -93,16 +95,9 @@ def run_pipeline(
             # a failed block kernel emits road_type='error:*' rows — those
             # must NOT be written as output nor ledger-recorded as done
             # (mirrors stage 1): record them as errors so a resume retries.
-            ok = out.filter(~F.col("road_type").startswith("error:"))
-            err_keys = [
-                r["block_id"]
-                for r in out.filter(F.col("road_type").startswith("error:"))
-                .select("block_id")
-                .distinct()
-                .collect()
-            ]
-            _write_and_record("reblock", ok, rb_path, pending_blocks.select("block_id"))
-            led.record_errors("reblock", err_keys)
+            failed = F.col("road_type").startswith("error:")
+            _write_and_record("reblock", out.filter(~failed), rb_path, pending_blocks.select("block_id"))
+            led.record_errors("reblock", _errors(out, "block_id", "road_type", failed))
             out.unpersist()
         outputs["reblock"] = spark.read.parquet(rb_path)
 

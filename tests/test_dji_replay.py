@@ -36,6 +36,7 @@ GOLDEN = "/root/reference/example_data/complexity/Africa/DJI/complexity_DJI.1.1_
 
 
 @pytest.mark.slow
+@pytest.mark.reference_fixture
 def test_dji_pipeline_replay(spark):
     csv.field_size_limit(sys.maxsize)
     golden = {r["block_id"]: r for r in csv.DictReader(open(GOLDEN))}
@@ -103,6 +104,7 @@ def test_dji_pipeline_replay(spark):
     assert within1 >= 171, f"{within1}/{total} within ±1 (achieved 174)"
 
 
+@pytest.mark.reference_fixture
 def test_blocks_polygonize_replay_dji():
     """Output-level validation of the K1→ε→0 noding+polygonize deviation on
     the reference's own 540-block golden output
@@ -160,6 +162,7 @@ def test_blocks_polygonize_replay_dji():
 
 
 @pytest.mark.slow
+@pytest.mark.reference_fixture
 def test_dji_distributed_stage_replay_golden_centroids(spark):
     """VERDICT r3 #1+#2: the DISTRIBUTED pipeline must score what the
     kernel-level replay scores (tools/dji_kernel_replay.py: 159/196 exact,

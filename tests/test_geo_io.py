@@ -2,6 +2,7 @@
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from prclz_spark import fixtures as FX
@@ -30,6 +31,7 @@ def test_geojson_codec_roundtrip():
         assert g2 == g
 
 
+@pytest.mark.reference_fixture
 def test_read_reference_buildings_geojson(spark):
     """S1 parity: the reference's own example_data buildings file."""
     df = read_geojson(spark, REF_BUILDINGS, ["osm_id", "building", "gadm_code"])
@@ -54,6 +56,7 @@ def test_csv_wkt_roundtrip(spark, tmp_path):
     assert abs(G.area(rows["b2"]) - 1.0) < 1e-9
 
 
+@pytest.mark.reference_fixture
 def test_read_reference_blocks_csv(spark):
     """S2 parity: the reference's golden blocks CSV (540 blocks)."""
     path = "/root/reference/example_data/blocks/Africa/DJI/blocks_DJI.1.1_1.csv"

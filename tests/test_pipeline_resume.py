@@ -37,3 +37,37 @@ def test_pipeline_runs_and_resumes(spark, tmp_path):
     led2 = Ledger(spark, f"{out_dir}/_ledger2")
     pend = led2.filter_pending(gadm, "blocks", "gadm")
     assert [r.gadm for r in pend.collect()] == [some_gadm]
+
+
+def test_pipeline_ledger_records_kernel_error_class(spark, tmp_path):
+    """A region whose blocks kernel raises is recorded in the ledger with the
+    kernel's own status, error:<Class>, and stays pending for a resume."""
+    import re
+
+    import numpy as np
+
+    from prclz_spark import geom as G
+
+    nx = 2
+    lines, gadm, bldgs = FX.geo_world(spark, nx, nx)
+    res = C.choose_resolution(*FX.grid_params(nx, nx), n_features=nx * nx * 4)
+    # valid WKB, but a LINESTRING where the kernel expects a (multi)polygon
+    x0, y0, x1, y1 = FX.grid_params(nx, nx)
+    bad = G.wkb_dumps(G.Geom(G.LINESTRING, np.array([[x0, y0], [x1, y1]])))
+    poisoned = gadm.select("gadm", "geometry").unionByName(
+        spark.createDataFrame([("POISON", bytearray(bad))], "gadm string, geometry binary")
+    )
+    out_dir = str(tmp_path / "pipe")
+    run_pipeline(spark, lines, poisoned, bldgs, out_dir, res, with_reblock=False)
+
+    rows = (
+        spark.read.parquet(f"{out_dir}/_ledger")
+        .filter("stage = 'blocks' AND partition_key = 'POISON'")
+        .collect()
+    )
+    assert len(rows) == 1
+    status = rows[0].status
+    assert re.fullmatch(r"error:[A-Z]\w*(Error|Exception)", status), status
+    led = Ledger(spark, f"{out_dir}/_ledger")
+    pend = led.filter_pending(poisoned, "blocks", "gadm")
+    assert [r.gadm for r in pend.collect()] == ["POISON"]

@@ -89,6 +89,7 @@ def test_split_ring_parts():
 
 
 @pytest.mark.slow
+@pytest.mark.reference_fixture
 def test_golden_dji_fixture_replay():
     """k-index vs the reference's golden complexity CSV: ≥66% exact and
     ≥97% within ±1. (The fixture is not bit-reproducible even from the

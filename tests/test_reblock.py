@@ -322,6 +322,7 @@ def test_reblock_op_matches_kernel_on_golden_grids(spark, k):
     assert lines_equal(got["existing"], want_existing), (got["existing"], want_existing)
 
 
+@pytest.mark.reference_fixture
 def test_sle_fixture_contract_and_negative_result(spark):
     """Round-4 VERDICT #5, measured outcome. The checked-in SLE reblock
     fixture — the reference's only second-site data — is a geometry-less
